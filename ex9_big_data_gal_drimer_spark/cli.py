@@ -24,7 +24,7 @@ import time
 from .pipeline import (
     export_samples_to_sqlite,
     generate_documentation,
-    materialize_query,
+    run_pipeline,
 )
 from .plans import QUERIES
 from .session import get_spark
@@ -85,11 +85,10 @@ def main(argv=None) -> int:
 
     names = args.queries or sorted(QUERIES)
     t0 = time.perf_counter()
+    metrics: dict = {}
+    run_pipeline(spark, {name: QUERIES[name] for name in names}, args.sf_dir, metrics)
     for name in names:
-        df = QUERIES[name](spark, args.sf_dir)
-        metrics: dict = {}
-        materialize_query(spark, name, df, metrics=metrics)
-        print(f"materialized {name} ({metrics.get('rows', '?')} rows)", flush=True)
+        print(f"materialized {name} ({metrics[name]['rows']} rows)", flush=True)
 
     db_path = os.path.join(args.out, "serve.db")
     exported = export_samples_to_sqlite(spark, db_path)

@@ -14,6 +14,22 @@ Sinks (SURVEY.md §2.1): S3 CTAS → ``saveAsTable`` (Parquet tables in
 the warehouse), R1 seeded sample tables, S9 SQLite export via
 pandas (the serving DB stays tiny by construction), S7/S8/S12 catalog
 introspection → markdown docs.
+
+Job budget of one pass (pinned by tests/test_pipeline.py):
+
+- 2 jobs per materialized query: the results write and the sample
+  write.  The two sinks read the same cached plan and neither needs
+  the other's output, so they run concurrently: about half of each
+  write's wall time is driver work outside its job, which the other
+  write overlaps.
+- 1 job per exported sample table (its ``toPandas`` read; the reads
+  run concurrently, the SQLite writes serially).
+- 2 jobs for the docs: one union-and-count over every sample table.
+  Results tables report catalog statistics and are never scanned.
+
+Table names come from ``SHOW TABLES``, a driver-side command;
+``spark.catalog.listTables()`` runs several Spark jobs per call (one,
+plus one per partition its local iterator walks).
 """
 
 from __future__ import annotations
@@ -23,14 +39,41 @@ import os
 import re
 import shutil
 import sqlite3
-from collections.abc import Callable, Mapping
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.sampling import seeded_sample_n
 
 SAMPLE_ROWS = 500
 SAMPLE_SEED = 42
+
+
+def _table_names(spark: SparkSession) -> list[str]:
+    """Tables and temp views of the current database, listed by the
+    driver-side ``SHOW TABLES`` command (no Spark job)."""
+    return [r.tableName for r in spark.sql("SHOW TABLES").collect()]
+
+
+def _run_concurrently(
+    spark: SparkSession,
+    thunks: Sequence[Callable[[], object]],
+    max_workers: int | None = None,
+) -> list:
+    """Run ``thunks`` on threads and return their results in order.
+
+    Each thunk is wrapped on the calling thread, so every worker gets
+    its own copy of the caller's local properties (job group, job
+    tags, SQL execution id slot).  All thunks finish before the first
+    failure, in list order, is re-raised."""
+    wrapped = [inheritable_thread_target(spark)(fn) for fn in thunks]
+    with ThreadPoolExecutor(max_workers=max_workers or len(wrapped)) as pool:
+        futures = [pool.submit(fn) for fn in wrapped]
+    return [f.result() for f in futures]
 
 
 def materialize_query(
@@ -48,12 +91,15 @@ def materialize_query(
     execution: the result plan is cached once, both sinks read it).
 
     Pass a dict as ``metrics`` to receive observed write-time metrics
-    (``rows``): an `Observation` rides the results-write action, so
-    the count costs nothing extra — no separate ``df.count()`` pass
-    (at 100 TB a post-hoc count is a second full scan).
+    (``rows``): an `Observation` over the cached result rides the write
+    actions, so the count costs nothing extra — no separate
+    ``df.count()`` pass (at 100 TB a post-hoc count is a second full
+    scan).
+
+    The two writes run concurrently; if either fails, both finish and
+    the first failure is raised.
     """
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     results_table = f"{name}_results"
     sample_table = f"{name}_sample"
@@ -74,13 +120,17 @@ def materialize_query(
             loc = os.path.join(warehouse, t.lower())
             if warehouse and os.path.isdir(loc):
                 shutil.rmtree(loc, ignore_errors=True)
-        df.write.mode("overwrite").saveAsTable(results_table)
+        sample = seeded_sample_n(df, sample_rows, seed)
+        _run_concurrently(spark, [
+            lambda: df.write.mode("overwrite").saveAsTable(results_table),
+            lambda: sample.write.mode("overwrite").saveAsTable(sample_table),
+        ])
         if obs is not None:
             metrics.update(obs.get)
-        seeded_sample_n(df, sample_rows, seed).write.mode("overwrite").saveAsTable(
-            sample_table
-        )
     finally:
+        # Known defect: with ``metrics``, ``df`` is the observed plan,
+        # which is not itself cached, so the cached result stays in
+        # the session until ``catalog.release_caches`` runs.
         df.unpersist()
     return results_table, sample_table
 
@@ -89,8 +139,12 @@ def run_pipeline(
     spark: SparkSession,
     queries: Mapping[str, Callable[[SparkSession, str], DataFrame]],
     sf_dir: str,
+    metrics: dict | None = None,
 ) -> dict[str, tuple[str, str]]:
     """Materialize every query; returns {name: (results, sample)}.
+
+    Pass a dict as ``metrics`` to receive each query's write-time
+    metrics as ``{name: {"rows": n}}`` (see :func:`materialize_query`).
 
     Releases all session caches afterwards: the dedup/similarity
     operators cache their signature frames internally, and across a
@@ -100,7 +154,12 @@ def run_pipeline(
 
     try:
         return {
-            name: materialize_query(spark, name, fn(spark, sf_dir))
+            name: materialize_query(
+                spark,
+                name,
+                fn(spark, sf_dir),
+                metrics=None if metrics is None else metrics.setdefault(name, {}),
+            )
             for name, fn in queries.items()
         }
     finally:
@@ -115,17 +174,19 @@ def export_samples_to_sqlite(
     The reference ships ``small_tables.db`` the same way
     (main.py:300-338).  Tables are ≤SAMPLE_ROWS rows by construction,
     so the pandas hop is the right tool — a JDBC writer would add a
-    jar dependency to move kilobytes.
+    jar dependency to move kilobytes.  The reads run concurrently, at
+    most one per default-parallelism slot; SQLite is written serially.
     """
     os.makedirs(os.path.dirname(sqlite_path) or ".", exist_ok=True)
-    exported = []
+    exported = [t for t in _table_names(spark) if table_filter in t]
+    frames = _run_concurrently(
+        spark,
+        [lambda t=t: spark.table(t).toPandas() for t in exported],
+        max_workers=spark.sparkContext.defaultParallelism,
+    )
     with sqlite3.connect(sqlite_path) as conn:
-        for t in spark.catalog.listTables():
-            if table_filter in t.name:
-                spark.table(t.name).toPandas().to_sql(
-                    t.name, conn, if_exists="replace", index=False
-                )
-                exported.append(t.name)
+        for t, pdf in zip(exported, frames):
+            pdf.to_sql(t, conn, if_exists="replace", index=False)
     return exported
 
 
@@ -133,28 +194,38 @@ def generate_documentation(spark: SparkSession, out_path: str) -> str:
     """Catalog docs: table list, row counts, schemas → markdown.
 
     Reference main.py:340-399 via information_schema/PRAGMA; here
-    spark.catalog.listTables/listColumns.  Exact counts are computed
+    SHOW TABLES and each table's schema.  Exact counts are computed
     only for the bounded ``_sample`` tables (≤SAMPLE_ROWS by
-    construction); other tables use the catalog's stored statistics
-    when available — scanning every result table just to print a row
-    count is the kind of hidden full pass that hurts at scale.
+    construction), all in one union-and-count pass; other tables use
+    the catalog's stored statistics when available — scanning every
+    result table just to print a row count is the kind of hidden full
+    pass that hurts at scale.
     """
+    names = sorted(_table_names(spark))
+    samples = [t for t in names if t.endswith("_sample")]
+    counts: dict[str, int] = {}
+    if samples:
+        tagged = [spark.table(t).select(F.lit(t).alias("name")) for t in samples]
+        counts = {
+            r["name"]: r["count"]
+            for r in reduce(DataFrame.unionAll, tagged).groupBy("name").count().collect()
+        }
     lines = [
         "# Database documentation",
         "",
         f"Generated: {datetime.datetime.now(datetime.timezone.utc):%Y-%m-%d %H:%M:%S} UTC",
         "",
     ]
-    for t in sorted(spark.catalog.listTables(), key=lambda t: t.name):
-        df = spark.table(t.name)
-        if t.name.endswith("_sample"):
-            rows = str(df.count())
+    for t in names:
+        df = spark.table(t)
+        if t.endswith("_sample"):
+            rows = str(counts.get(t, 0))
         else:
-            stats = spark.sql(f"DESCRIBE EXTENDED {t.name}").collect()
+            stats = spark.sql(f"DESCRIBE EXTENDED {t}").collect()
             detail = {r.col_name: r.data_type for r in stats}
             m = re.search(r"(\d+) rows", detail.get("Statistics", "") or "")
             rows = m.group(1) if m else "(not computed — run ANALYZE TABLE)"
-        lines += [f"## {t.name}", "", f"Rows: {rows}", "", "| column | type |", "|---|---|"]
+        lines += [f"## {t}", "", f"Rows: {rows}", "", "| column | type |", "|---|---|"]
         lines += [f"| {f.name} | {f.dataType.simpleString()} |" for f in df.schema.fields]
         lines.append("")
     os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
