@@ -6,24 +6,23 @@ Prints ONE JSON line:
    "queries": {...per-query sec...}, "sf": 0.1}
 
 Methodology (matches BASELINE.md): warm timings — one untimed warmup
-run per query (pays codegen/classload), then the MEDIAN of
-$SPARK_GRAFT_BENCH_REPEATS (default 3) timed runs (median, not mean:
-this box shows hypervisor steal spikes that can triple one run of an
-0.3 s query, and a mean of 3 inherits the spike).  Timing starts
-after the SparkSession exists; the suite amortizes the JVM+session
-floor the way the reference amortizes its single DuckDB connection
-(reference main.py:236).
+run per query (pays codegen/classload), then the MEDIAN of REPEATS
+timed runs (median, not mean: this box shows hypervisor steal spikes
+that can triple one run of an 0.3 s query, and a mean of 3 inherits
+the spike).  Timing starts after the SparkSession exists; the suite
+amortizes the JVM+session floor the way the reference amortizes its
+single DuckDB connection (reference main.py:236).
 
 Suite amortization: the testdata tables are cached once up front
 (catalog.cache_tables) so 56 queries x 4 runs don't re-read and
 re-decode the same parquet ~224 times; the cache fill is reported
 separately as "setup_seconds" and not charged to any query.
 
-Extra diagnostics in the JSON line (ignored by the driver's
-metric parser, useful for round-over-round tracking):
-  - "setup_seconds": table cache fill time
-  - "delta_vs_prev": per-query delta against the newest BENCH_r*.json
-    found next to this script (negative = faster this round)
+This module is the one home of that method: :func:`bench_session`
+builds the session and :func:`run_query` times one query.  The tools
+(``tools/joblog.py``, ``tools/dump_plans.py``,
+``tools/shuffle_audit.py``) import both from here, so every number
+they report is measured the way the suite's is.
 """
 
 from __future__ import annotations
@@ -36,23 +35,18 @@ import statistics
 import sys
 import time
 
-# 16 GiB JVM for EVERY bench leg (overridable via the same env var):
-# suite-long cache accumulation (base tables + suite-shared
-# edge/posting caches across the full registry) pressures the 8 GiB
-# default's storage fraction at the 230-query registry size — first
-# measured as an sf1 OOM (close_round.sh), then at sf0.1 as a uniform
-# ~9 % GC-pressure inflation on UNTOUCHED queries (r10 8 GiB suite
-# 67.3 s vs 59.0 s at 16 GiB, shared-223 median vs r09 1.09 → 0.94).
-# Heap size changes GC headroom, not per-query plan timings.  Must be
-# set before the JVM launches, hence before get_spark() runs.
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+from pyspark.sql import SparkSession
 
 from ex9_big_data_gal_drimer_spark.catalog import (
     cache_tables,
     release_query_caches,
 )
 from ex9_big_data_gal_drimer_spark.plans import QUERIES
+from ex9_big_data_gal_drimer_spark.plans.registry import ITERATIVE_CONSTRUCTION
 from ex9_big_data_gal_drimer_spark.session import get_spark
+
+#: Timed runs per query; the suite reports their median.
+REPEATS = 3
 
 
 def _matches_committed(
@@ -114,58 +108,6 @@ def _snapshot_before_overwrite(here: str, full_path: str) -> None:
         os.remove(legacy)
 
 
-def _previous_bench(
-    here: str, exclude: str | None = None
-) -> tuple[str, dict[str, float]] | None:
-    """Newest committed bench numbers, for delta reporting: prefer the
-    newest BENCH_FULL_r{N}.json (bench.py writes it with the COMPLETE
-    per-query map), falling back to the newest driver BENCH_r{N}.json
-    whose 2000-char stdout tail must be scraped (and whose truncation
-    can silently produce bogus per-query baselines — the reason FULL
-    wins even for an older round number).
-
-    `exclude` is the path this run is about to (over)write: a rerun in
-    place must never pick its own first pass as the baseline, or the
-    delta map describes rN-vs-rN instead of rN-vs-r(N-1) — this bit
-    rounds 7 and 9 both."""
-    fulls = []
-    for path in glob.glob(os.path.join(here, "BENCH_FULL_r*.json")):
-        if exclude is not None and os.path.abspath(path) == os.path.abspath(
-            exclude
-        ):
-            continue
-        m = re.search(r"BENCH_FULL_r(\d+)\.json$", path)
-        if m:
-            fulls.append((int(m.group(1)), path))
-    if fulls:
-        try:
-            _, path = max(fulls)
-            with open(path) as fh:
-                return os.path.basename(path), json.load(fh)["queries"]
-        except (OSError, json.JSONDecodeError, KeyError):
-            pass
-    best = _newest_round(here)
-    if best is None:
-        return None
-    try:
-        with open(best[1]) as fh:
-            data = json.load(fh)
-        queries = data.get("queries") or (data.get("parsed") or {}).get(
-            "queries", {}
-        )
-        if not queries:
-            # Scrape "name": seconds pairs out of the stdout tail; the
-            # queries dict precedes the delta section, so the FIRST
-            # occurrence of a name is its absolute time.
-            for name, sec in re.findall(r'"(\w+)": (\d+\.\d+)', data.get("tail", "")):
-                if name not in queries and name not in ("sf", "value"):
-                    queries[name] = float(sec)
-            queries.pop("setup_seconds", None)
-        return os.path.basename(best[1]), queries
-    except (OSError, json.JSONDecodeError, KeyError):
-        return None
-
-
 def _newest_round(here: str) -> tuple[int, str] | None:
     """(round, path) of the newest BENCH_r{N}.json next to the script."""
     best: tuple[int, str] | None = None
@@ -183,93 +125,11 @@ def main() -> int:
     except ValueError:
         sf = None
 
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-
-    spark = get_spark(app_name="ex9-bench")
-
-    # Size the static shuffle-partition count to the benched scale
-    # factor (the brief's "size shuffle partitions to the target SF"):
-    # post-shuffle data at sf<=0.1 is a few MB, so 8 partitions cut
-    # task-dispatch overhead without losing parallelism — operators
-    # that need CPU fan-out repartition(defaultParallelism) explicitly,
-    # which ignores this knob.  On a real cluster AQE coalescing makes
-    # the static number moot; leave the session default (32) there.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4"),
-    )
-    # Sub-second post-agg queries at sf<=0.1 spend AQE's per-stage
-    # re-planning (extra job boundaries) without anything to coalesce
-    # beyond the already-small static partition count — disabling it in
-    # bench cut the flagship six ~20 % (round-2 verdict ask #4).  On a
-    # real cluster AQE stays on (session default): coalescing, skew
-    # splitting and runtime broadcast decisions all matter at scale.
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        os.environ.get("SPARK_GRAFT_BENCH_AQE", "false"),
-    )
-    # Arrow-columnar result materialization: the timed action is
-    # toArrow() + a local Arrow→pandas conversion, matching how the
-    # reference consumes DuckDB results (.df() → pandas).  Row-based
-    # collect() serializes ~100k-row results one Row at a time through
-    # Py4J and was charging events_session_10m ~0.8 s of pure client
-    # transfer that the DuckDB baseline's native columnar fetch never
-    # pays.  df.toPandas() is NOT used: it wraps the same Arrow
-    # collect in per-call Py4J conf lookups and per-column coercion
-    # that measured up to +0.23 s on sub-second queries — client
-    # wrapper chatter, not engine work.
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-    t0 = time.perf_counter()
-    cache_tables(spark, sf_dir)
-    setup_seconds = round(time.perf_counter() - t0, 3)
-
-    # Iterative/materializing operators run actions during plan
-    # CONSTRUCTION (fixpoint loops, sketch-store writes, the
-    # vectorized top-k's query-vector collect); excluding construction
-    # from their timing would hide the real work.
-    from ex9_big_data_gal_drimer_spark.plans.registry import (
-        ITERATIVE_CONSTRUCTION as iterative,
-    )
-
-    def fetch(df):
-        """Materialize a result as pandas via the Arrow collect."""
-        return df.toArrow().to_pandas()
-
+    spark, setup_seconds = bench_session("ex9-bench", sf_dir)
     times: dict[str, float] = {}
     for name, fn in sorted(QUERIES.items()):
-        # Each timed run REBUILDS the DataFrame so the physical DAG is
-        # fresh and every stage genuinely re-executes (re-collecting
-        # one DataFrame object would silently reuse its shuffle map
-        # outputs — skipped stages, not a measurement).  The stopwatch
-        # covers the fetch action only: analysis, optimization,
-        # scheduling, execution, Arrow result transfer and the pandas
-        # conversion — not the Python-side plan construction, which is
-        # client chatter DuckDB's sub-ms parse has no analogue for.
-        # Query-created caches (intra-query intermediates registered
-        # via catalog.query_persist) are RELEASED before every timed
-        # run, so each run re-materializes them and the persist's fill
-        # cost lands inside the stopwatch — a persist-only change now
-        # moves the number by ~0 (round-13 verdict #2: the old harness
-        # let the warmup materialize them, so timed reps read
-        # InMemoryTableScan and the fill was never charged; r13's
-        # persist-driven per-query numbers are not comparable).  The
-        # warmup still pays codegen/classload and the BASE table cache
-        # fill; base caches (cache_tables) are never released here.
-        fetch(fn(spark, sf_dir))  # untimed warmup (codegen, cache fill)
-        samples = []
-        for _ in range(repeats):
-            release_query_caches()
-            if name in iterative:
-                t0 = time.perf_counter()
-                fetch(fn(spark, sf_dir))
-            else:
-                df = fn(spark, sf_dir)
-                t0 = time.perf_counter()
-                fetch(df)
-            samples.append(time.perf_counter() - t0)
-        release_query_caches()
-        times[name] = round(statistics.median(samples), 3)
+        runs = run_query(spark, name, fn, sf_dir, REPEATS)
+        times[name] = round(statistics.median(t for _, t in runs), 3)
 
     out = {
         "metric": "suite_seconds",
@@ -288,31 +148,17 @@ def main() -> int:
     }
 
     # The driver keeps only the tail of stdout, so round-N's per-query
-    # numbers would survive only as deltas inside the next round's file
+    # numbers would not survive there
     # (round-2 verdict ask #2).  Persist the complete JSON in-repo too:
     # BENCH_FULL_r{N}.json where N = newest driver BENCH_r*.json + 1
     # (the round about to be recorded).  Overridable for local runs so
-    # iterating at sf0.01 never clobbers a round artifact.  The output
-    # path is resolved BEFORE the delta baseline so a rerun in place
-    # excludes its own first pass from the candidate set.
+    # iterating at sf0.01 never clobbers a round artifact.
     here = os.path.dirname(os.path.abspath(__file__))
     full_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if full_path is None:
         newest = _newest_round(here)
         round_n = (newest[0] if newest else 0) + 1
         full_path = os.path.join(here, f"BENCH_FULL_r{round_n:02d}.json")
-
-    prev = _previous_bench(here, exclude=full_path)
-    if prev is not None:
-        prev_name, prev_times = prev
-        out["delta_vs_prev"] = {
-            "baseline": prev_name,
-            "queries": {
-                q: round(t - prev_times[q], 3)
-                for q, t in times.items()
-                if q in prev_times
-            },
-        }
 
     _snapshot_before_overwrite(here, full_path)
     with open(full_path, "w") as fh:
@@ -338,6 +184,113 @@ def main() -> int:
     }
     print(json.dumps(compact))
     return 0
+
+
+
+
+def bench_session(
+    app_name: str, sf_dir: str, extra_conf: dict[str, str] | None = None
+) -> tuple[SparkSession, float]:
+    """Build the bench session: engine session, the two plan confs below
+    and the base tables cached.  Returns ``(spark, setup_s)``, where
+    ``setup_s`` is the table cache fill time."""
+    # 16 GiB JVM for EVERY bench leg (overridable via the same env var):
+    # suite-long cache accumulation (base tables + suite-shared
+    # edge/posting caches across the full registry) pressures the 8 GiB
+    # default's storage fraction at the 230-query registry size — first
+    # measured as an sf1 OOM (close_round.sh), then at sf0.1 as a uniform
+    # ~9 % GC-pressure inflation on UNTOUCHED queries (r10 8 GiB suite
+    # 67.3 s vs 59.0 s at 16 GiB, shared-223 median vs r09 1.09 → 0.94).
+    # Heap size changes GC headroom, not per-query plan timings.  Must be
+    # set before the JVM launches, hence before get_spark() runs.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+    spark = get_spark(app_name=app_name, extra_conf=extra_conf)
+
+    # Size the static shuffle-partition count to the benched scale
+    # factor (the brief's "size shuffle partitions to the target SF"):
+    # post-shuffle data at sf<=0.1 is a few MB, so 4 partitions cut
+    # task-dispatch overhead without losing parallelism — operators
+    # that need CPU fan-out repartition(defaultParallelism) explicitly,
+    # which ignores this knob.  On a real cluster AQE coalescing makes
+    # the static number moot; leave the session default (32) there.
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    # Sub-second post-agg queries at sf<=0.1 spend AQE's per-stage
+    # re-planning (extra job boundaries) without anything to coalesce
+    # beyond the already-small static partition count — disabling it in
+    # bench cut the flagship six ~20 % (round-2 verdict ask #4).  On a
+    # real cluster AQE stays on (session default): coalescing, skew
+    # splitting and runtime broadcast decisions all matter at scale.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+
+    t0 = time.perf_counter()
+    cache_tables(spark, sf_dir)
+    return spark, round(time.perf_counter() - t0, 3)
+
+
+def fetch(df):
+    """Materialize a result as pandas via the Arrow collect.
+
+    Arrow-columnar result materialization: the timed action is
+    toArrow() + a local Arrow→pandas conversion, matching how the
+    reference consumes DuckDB results (.df() → pandas).  Row-based
+    collect() serializes ~100k-row results one Row at a time through
+    Py4J and was charging events_session_10m ~0.8 s of pure client
+    transfer that the DuckDB baseline's native columnar fetch never
+    pays.  df.toPandas() is NOT used: it wraps the same Arrow collect
+    in per-call Py4J conf lookups and per-column coercion that
+    measured up to +0.23 s on sub-second queries — client wrapper
+    chatter, not engine work."""
+    return df.toArrow().to_pandas()
+
+
+def run_query(
+    spark: SparkSession, name: str, fn, sf_dir: str, repeats: int
+) -> list[tuple[float, float]]:
+    """One untimed warmup, then ``repeats`` timed runs of query ``fn``.
+
+    Returns one ``(construct_s, timed_s)`` pair per timed run.  The jobs
+    of timed run ``rep`` carry the job description ``"{name}#{rep}"``.
+
+    Each timed run REBUILDS the DataFrame so the physical DAG is fresh
+    and every stage genuinely re-executes (re-collecting one DataFrame
+    object would silently reuse its shuffle map outputs — skipped
+    stages, not a measurement).  The stopwatch covers the fetch action
+    only: analysis, optimization, scheduling, execution, Arrow result
+    transfer and the pandas conversion — not the Python-side plan
+    construction, which is client chatter DuckDB's sub-ms parse has no
+    analogue for.  Exception: iterative/materializing operators
+    (``ITERATIVE_CONSTRUCTION``) run actions during plan CONSTRUCTION
+    (fixpoint loops, sketch-store writes, the vectorized top-k's
+    query-vector collect); excluding construction from their timing
+    would hide the real work, so their ``timed_s`` includes it.
+
+    Query-created caches (intra-query intermediates registered via
+    catalog.query_persist) are RELEASED before every timed run and after
+    the last, so each run re-materializes them and the persist's fill
+    cost lands inside the stopwatch — a persist-only change moves the
+    number by ~0 (round-13 verdict #2: the old harness let the warmup
+    materialize them, so timed reps read InMemoryTableScan and the fill
+    was never charged).  The warmup still pays codegen/classload and
+    the BASE table cache fill; base caches (cache_tables) are never
+    released here."""
+    sc = spark.sparkContext
+    fetch(fn(spark, sf_dir))  # untimed warmup (codegen, cache fill)
+    runs = []
+    try:
+        for rep in range(repeats):
+            release_query_caches()
+            sc.setJobDescription(f"{name}#{rep}")
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            fetch(df)
+            t2 = time.perf_counter()
+            timed_s = t2 - (t0 if name in ITERATIVE_CONSTRUCTION else t1)
+            runs.append((t1 - t0, timed_s))
+    finally:
+        sc.setJobDescription(None)
+        release_query_caches()
+    return runs
 
 
 if __name__ == "__main__":

@@ -107,11 +107,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def percent_of(value: Column, total: Column, scale: int = 2) -> Column:
-    """``ROUND(value * 100.0 / total, scale)`` (reference main.py:49)."""
-    return F.round(value * F.lit(100.0) / total, scale)
-
-
 def minhash_signature(shingles_col: Column, num_hashes: int = 16) -> Column:
     """Array of `num_hashes` MinHash values over a shingle array.
 

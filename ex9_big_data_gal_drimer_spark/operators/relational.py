@@ -67,12 +67,6 @@ def percent_of_total(
     return out if keep_total else out.drop(total_col)
 
 
-def top_k(df: DataFrame, order_cols: list, k: int) -> DataFrame:
-    """ORDER BY + LIMIT k — Spark plans TakeOrderedAndProject (true
-    top-k, no global sort; reference main.py:135-136)."""
-    return df.orderBy(*order_cols).limit(k)
-
-
 def sorted_small(df: DataFrame, *order_cols) -> DataFrame:
     """Globally ordered output for a SMALL (post-aggregate) frame.
 

@@ -101,14 +101,3 @@ def unpartitioned_window_violations(df: DataFrame) -> list[str]:
     walk(df._jdf.queryExecution().optimizedPlan())
     return violations
 
-
-def audit_registry(spark, sf_dir: str, queries: dict) -> dict[str, dict]:
-    """Run the static audit over every registered query."""
-    out = {}
-    for name, fn in queries.items():
-        df = fn(spark, sf_dir)
-        out[name] = {
-            "exchanges": count_exchanges(df),
-            "cartesian": has_cartesian(df),
-        }
-    return out

@@ -63,14 +63,23 @@ PLAN_CONF = {
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply the deterministic (correctness) runtime confs to an
-    existing session — the confs every query's VALUES depend on."""
+    existing session — the confs every query's VALUES depend on.
+
+    Raises RuntimeError when a conf cannot be set and the session holds
+    a different value."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except Exception as err:
             # Non-settable on some build (e.g. Spark Connect restricted
-            # conf) — queries still work wherever defaults already match.
-            pass
+            # conf): queries are still correct only where the session
+            # already holds the value, so any other value must fail
+            # loudly instead of silently changing results.
+            current = spark.conf.get(k, None)
+            if current != v:
+                raise RuntimeError(
+                    f"cannot set {k} to {v!r} (session has {current!r})"
+                ) from err
     return spark
 
 

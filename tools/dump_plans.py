@@ -3,9 +3,10 @@
 
 Usage: python tools/dump_plans.py --tag after --out plans/r14 q1 q2 ...
 
-Run from any checkout (the repo root on sys.path decides which code
-is explained); bench confs applied so the plan matches what the bench
-executes.  Output files: <out>/<query>_<tag>.txt
+Run from any checkout's root (the cwd on sys.path decides which code
+is explained); the session is bench.py's ``bench_session``, so the
+plan matches what the bench executes.  Output files:
+<out>/<query>_<tag>.txt
 """
 from __future__ import annotations
 
@@ -15,13 +16,10 @@ import io
 import os
 import sys
 
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
-
 sys.path.insert(0, os.getcwd())
 
-from ex9_big_data_gal_drimer_spark.catalog import cache_tables  # noqa: E402
+from bench import bench_session  # noqa: E402
 from ex9_big_data_gal_drimer_spark.plans import QUERIES  # noqa: E402
-from ex9_big_data_gal_drimer_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -34,12 +32,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    spark = get_spark(app_name="ex9-dump-plans")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    cache_tables(spark, args.sf)
+    spark, _ = bench_session("ex9-dump-plans", args.sf)
 
     os.makedirs(args.out, exist_ok=True)
     for name in args.names:

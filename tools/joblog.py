@@ -1,14 +1,18 @@
 #!/usr/bin/env python
 """Event-log job/stage attribution for one or more queries.
 
-Usage: python tools/joblog.py q1 [q2 ...] [--runs 2]
+Usage: python tools/joblog.py q1 [q2 ...] [--runs 2] [--sf DIR]
 
-Replicates bench.py methodology (cached tables, AQE off, 4 shuffle
-partitions, Arrow collect, warmup then timed runs) with the Spark
-event log enabled, then prints per-run job timelines: job id, duration,
-number of tasks, and the first line of the job's call site — enough to
-attribute wall time to actions (collects, broadcast builds, cache
-fills) without the history server.
+Runs each query with bench.py's method (``bench.bench_session`` and
+``bench.run_query``) with the Spark event log enabled, then prints per
+timed run its plan-construction seconds and its timed seconds (the
+number bench.py reports; construction + fetch is their sum, except for
+ITERATIVE_CONSTRUCTION queries whose timed seconds already include
+construction), followed by the run's jobs: job id, duration, number of
+tasks, and the first line of the job's call site — enough to attribute
+wall time to actions (collects, broadcast builds, cache fills) without
+the history server.  Jobs are matched to runs by the job description
+``run_query`` sets.
 """
 from __future__ import annotations
 
@@ -16,65 +20,16 @@ import argparse
 import json
 import os
 import sys
-import time
-
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_session, run_query  # noqa: E402
+from ex9_big_data_gal_drimer_spark.plans import QUERIES  # noqa: E402
 
 LOG_DIR = "/tmp/ex9_eventlog"
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+")
-    ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    args = ap.parse_args()
-
-    os.makedirs(LOG_DIR, exist_ok=True)
-
-    from ex9_big_data_gal_drimer_spark.catalog import cache_tables
-    from ex9_big_data_gal_drimer_spark.plans import QUERIES
-    from ex9_big_data_gal_drimer_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="ex9-joblog",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": LOG_DIR,
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    app_id = spark.sparkContext.applicationId
-    cache_tables(spark, args.sf)
-
-    def fetch(df):
-        return df.toArrow().to_pandas()
-
-    marks = []  # (name, run, t_start_ms, t_end_ms, wall_s)
-    from ex9_big_data_gal_drimer_spark.catalog import release_query_caches
-
-    for name in args.names:
-        fn = QUERIES[name]
-        fetch(fn(spark, args.sf))  # warmup
-        for r in range(args.runs):
-            # bench.py methodology: query-created caches are released
-            # before every timed run so their fill cost is charged.
-            release_query_caches()
-            spark.sparkContext.setJobDescription(f"{name}#run{r}")
-            t0 = time.time() * 1000
-            tw = time.perf_counter()
-            fetch(fn(spark, args.sf))
-            wall = time.perf_counter() - tw
-            marks.append((name, r, t0, time.time() * 1000, wall))
-    spark.stop()
-
-    # parse the event log
+def _event_lines(app_id: str):
     path = os.path.join(LOG_DIR, app_id)
     if not os.path.exists(path):
         cands = [
@@ -91,15 +46,38 @@ def main() -> int:
         )
     else:
         parts = [path]
+    for p in parts:
+        with open(p) as fh:
+            yield from fh
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="+")
+    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    args = ap.parse_args()
+
+    os.makedirs(LOG_DIR, exist_ok=True)
+    spark, _ = bench_session(
+        "ex9-joblog",
+        args.sf,
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": LOG_DIR,
+            "spark.eventLog.compress": "false",
+        },
+    )
+    app_id = spark.sparkContext.applicationId
+    runs = {
+        name: run_query(spark, name, QUERIES[name], args.sf, args.runs)
+        for name in args.names
+    }
+    spark.stop()
+
     jobs = {}   # id -> dict
     stages = {}  # id -> dict
-
-    def lines():
-        for p in parts:
-            with open(p) as fh:
-                yield from fh
-
-    for line in lines():
+    for line in _event_lines(app_id):
         try:
             ev = json.loads(line)
         except json.JSONDecodeError:
@@ -126,11 +104,14 @@ def main() -> int:
                 "ntasks": si.get("Number of Tasks", 0),
             }
 
-    for name, r, t0, t1, wall in marks:
-        print(f"\n=== {name} run{r}: wall {wall:.3f}s ===")
-        for jid in sorted(jobs):
-            j = jobs[jid]
-            if j["start"] >= t0 and j["start"] <= t1:
+    for name, reps in runs.items():
+        for rep, (construct_s, timed_s) in enumerate(reps):
+            desc = f"{name}#{rep}"
+            print(f"\n=== {desc}: construct {construct_s:.3f}s  timed {timed_s:.3f}s ===")
+            for jid in sorted(jobs):
+                j = jobs[jid]
+                if j["desc"] != desc:
+                    continue
                 dur = (j.get("end", j["start"]) - j["start"]) / 1000.0
                 print(f"  job {jid}: {dur:6.3f}s  tasks={j['ntasks']:3d}  {j['callsite'][:60]}")
                 for sid in j["stages"]:

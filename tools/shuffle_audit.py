@@ -15,13 +15,13 @@ plus a summary block (totals, zero-spill count, worst shufflers and
 the shuffle-bytes : scan-rows ratio that flags verbatim-shuffle
 plans).
 
-Methodology matches bench.py (AQE off, 4 shuffle partitions, cached
-tables) so the audited plans are the benched plans.  Iterative-
-construction queries report the FINAL plan's metrics; their
-construction-time jobs (fixpoint rounds, codebook training) are
-documented separately in PLANS.md.
+The session is bench.py's ``bench_session`` (AQE off, 4 shuffle
+partitions, cached tables) so the audited plans are the benched
+plans.  Iterative-construction queries report the FINAL plan's
+metrics; their construction-time jobs (fixpoint rounds, codebook
+training) are documented separately in PLANS.md.
 
-Usage: python tools/shuffle_audit.py [sf_dir] [out_json]
+Usage: python tools/shuffle_audit.py SF_DIR OUT_JSON
 """
 
 from __future__ import annotations
@@ -32,12 +32,9 @@ import sys
 
 sys.path.insert(0, ".")
 
-from ex9_big_data_gal_drimer_spark.catalog import (  # noqa: E402
-    cache_tables,
-    release_query_caches,
-)
+from bench import bench_session  # noqa: E402
+from ex9_big_data_gal_drimer_spark.catalog import release_query_caches  # noqa: E402
 from ex9_big_data_gal_drimer_spark.plans import QUERIES  # noqa: E402
-from ex9_big_data_gal_drimer_spark.session import get_spark  # noqa: E402
 
 
 def _node_metrics(node) -> dict[str, int]:
@@ -88,14 +85,14 @@ def collect_plan_metrics(df) -> dict[str, int]:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "SHUFFLE_r03.json"
+    # Both paths are required: an output default would overwrite a
+    # committed SHUFFLE_r*.json artifact.
+    if len(sys.argv) != 3:
+        print("usage: python tools/shuffle_audit.py SF_DIR OUT_JSON", file=sys.stderr)
+        return 2
+    sf_dir, out_path = sys.argv[1:]
 
-    spark = get_spark(app_name="shuffle-audit")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    cache_tables(spark, sf_dir)
+    spark, _ = bench_session("shuffle-audit", sf_dir)
 
     report: dict[str, dict] = {}
     for name, fn in sorted(QUERIES.items()):
