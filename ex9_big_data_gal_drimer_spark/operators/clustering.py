@@ -157,123 +157,83 @@ def kmeans_fit(
     # cast runs once.  MEMORY_AND_DISK: at cluster scale an
     # un-cacheable corpus just spills, correctness unchanged.
     emb = emb.persist()
-    init = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    # Centroid state stays in Python between iterations (it was
-    # collected anyway) — one Spark action per Lloyd round, not two.
-    state = {i: list(r[vec_col]) for i, r in enumerate(init)}
-
-    def as_df():
-        from ..catalog import local_df
-
-        return local_df(
-            spark, sorted(state.items()), "centroid_id INT, cvec ARRAY<DOUBLE>"
-        )
-
-    # Each Lloyd round is ONE Arrow-vectorized pass (mapInPandas):
-    # every batch computes its assignment argmax as a numpy matmul and
-    # emits k partial rows [sum_vec ++ count] — the map-side combine.
-    # The reduce side then sums k×(dim+1) primitive cells, so shuffle
-    # volume per round is k·(dim+1)·numPartitions cells regardless of
-    # corpus size, and the 512-odd multiply-adds per row run as BLAS
-    # instead of interpreted higher-order-function expressions
-    # (~30× per-row speedup measured at sf0.1).
-    dim = len(state[0])
-
-    def partials_fn(cent_normed):
-        def f(batches):
-            import numpy as np
-            import pandas as pd
-
-            C = np.asarray(cent_normed)  # k×dim, rows pre-normalized
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy())
-                # argmax of dot(v, c/|c|) == cosine argmax (|v| is a
-                # positive row constant); np.argmax takes the FIRST
-                # max — ties break to the smallest centroid id.
-                a = (X @ C.T).argmax(axis=1)
-                acc = np.zeros((k, dim + 1))
-                np.add.at(acc, a, np.hstack([X, np.ones((len(X), 1))]))
-                yield pd.DataFrame(
-                    {"centroid_id": np.arange(k), "s": list(acc)}
-                )
-
-        return f
-
-    for _ in range(n_iter):
-        _, cn = _normed_matrix(sorted(state.items()))
-        cells = (
-            emb.select(vec_col)
-            .mapInPandas(partials_fn(cn), "centroid_id INT, s ARRAY<DOUBLE>")
-            .select("centroid_id", F.posexplode("s").alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.sum("x").alias("sx"))
+    try:
+        init = (
+            emb.select(id_col, vec_col)
+            .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+            .limit(k)
             .collect()
         )
-        sums: dict[int, list[float]] = {}
-        for r in cells:
-            sums.setdefault(r["centroid_id"], [0.0] * (dim + 1))[r["pos"]] = r["sx"]
-        # Empty clusters keep their previous centroid (standard Lloyd
-        # fallback) so the table stays k rows.
-        for cid, vec in sums.items():
-            n = vec[dim]
-            if n > 0:
-                state[cid] = [x / n for x in vec[:dim]]
-    emb.unpersist()
+        # Centroid state stays in Python between iterations (it was
+        # collected anyway) — one Spark action per Lloyd round, not two.
+        state = {i: list(r[vec_col]) for i, r in enumerate(init)}
+
+        def as_df():
+            from ..catalog import local_df
+
+            return local_df(
+                spark, sorted(state.items()), "centroid_id INT, cvec ARRAY<DOUBLE>"
+            )
+
+        # Each Lloyd round is ONE Arrow-vectorized pass (mapInPandas):
+        # every batch computes its assignment argmax as a numpy matmul and
+        # emits k partial rows [sum_vec ++ count] — the map-side combine.
+        # The reduce side then sums k×(dim+1) primitive cells, so shuffle
+        # volume per round is k·(dim+1)·numPartitions cells regardless of
+        # corpus size, and the 512-odd multiply-adds per row run as BLAS
+        # instead of interpreted higher-order-function expressions
+        # (~30× per-row speedup measured at sf0.1).
+        dim = len(state[0])
+
+        def partials_fn(cent_normed):
+            def f(batches):
+                import numpy as np
+                import pandas as pd
+
+                C = np.asarray(cent_normed)  # k×dim, rows pre-normalized
+                for pdf in batches:
+                    if not len(pdf):
+                        continue
+                    X = np.stack(pdf[vec_col].to_numpy())
+                    # argmax of dot(v, c/|c|) == cosine argmax (|v| is a
+                    # positive row constant); np.argmax takes the FIRST
+                    # max — ties break to the smallest centroid id.
+                    a = (X @ C.T).argmax(axis=1)
+                    acc = np.zeros((k, dim + 1))
+                    np.add.at(acc, a, np.hstack([X, np.ones((len(X), 1))]))
+                    yield pd.DataFrame(
+                        {"centroid_id": np.arange(k), "s": list(acc)}
+                    )
+
+            return f
+
+        for _ in range(n_iter):
+            _, cn = _normed_matrix(sorted(state.items()))
+            cells = (
+                emb.select(vec_col)
+                .mapInPandas(partials_fn(cn), "centroid_id INT, s ARRAY<DOUBLE>")
+                .select("centroid_id", F.posexplode("s").alias("pos", "x"))
+                .groupBy("centroid_id", "pos")
+                .agg(F.sum("x").alias("sx"))
+                .collect()
+            )
+            sums: dict[int, list[float]] = {}
+            for r in cells:
+                sums.setdefault(r["centroid_id"], [0.0] * (dim + 1))[r["pos"]] = r["sx"]
+            # Empty clusters keep their previous centroid (standard Lloyd
+            # fallback) so the table stays k rows.
+            for cid, vec in sums.items():
+                n = vec[dim]
+                if n > 0:
+                    state[cid] = [x / n for x in vec[:dim]]
+    finally:
+        emb.unpersist()
     out = as_df()
     # The trainer holds the model driver-side already; pin it on the
     # DataFrame so _centroid_rows never pays a collect job for it.
     out._ex9_centroid_rows = sorted(
         (int(cid), [float(x) for x in vec]) for cid, vec in state.items()
     )
-    return out
-
-
-#: Per-(session, store) memo of LOADED centroid tables: the model
-#: registry's in-session face — a serving query re-reading the k-row
-#: model parquet (plus its collect) on every plan construction is
-#: per-run overhead for immutable state (round-13; same contract as
-#: queries_semdedup._TRAINED_CENTROIDS, dropped with the session).
-_LOADED_MODELS: dict[tuple[str, str], DataFrame] = {}
-
-
-def kmeans_fit_or_load(
-    emb: DataFrame,
-    store_path: str,
-    k: int = 8,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Load the trained centroid table from `store_path` if present,
-    else fit and persist it there — the train-once-serve-many contract
-    a production ANN index runs under (the model analogue of the
-    sketch store: persisted state consulted by later sessions instead
-    of recomputed).  The store is a tiny parquet (k rows); a schema
-    mismatch or unreadable store falls back to a fresh fit+write.
-    """
-    spark = emb.sparkSession
-    memo_key = (spark.sparkContext.applicationId, store_path)
-    got = _LOADED_MODELS.get(memo_key)
-    if got is not None:
-        return got
-    try:
-        stored = spark.read.parquet(store_path)
-        if set(stored.columns) == {"centroid_id", "cvec"}:
-            _LOADED_MODELS[memo_key] = stored
-            return stored
-    except Exception:
-        pass
-    centroids = kmeans_fit(emb, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
-    centroids.write.mode("overwrite").parquet(store_path)
-    out = spark.read.parquet(store_path)
-    _LOADED_MODELS[memo_key] = out
     return out
 
 

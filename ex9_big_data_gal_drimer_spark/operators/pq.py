@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import session_memo
+
 
 def _unit_rows(X):
     """Row-normalize to unit L2 — on unit vectors, L2 ordering ≡
@@ -41,13 +43,6 @@ def _unit_rows(X):
     n = np.linalg.norm(X, axis=1)
     n[n == 0] = 1.0
     return X / n[:, None]
-
-
-#: Train-once memo: (applicationId, cache_key, m, k, n_iter, sample_n)
-#: → codebooks.  The fit is deterministic for a given corpus, so
-#: within one session it is a model artifact, not a recomputation —
-#: the in-process analogue of kmeans_fit_or_load's parquet store.
-_FIT_MEMO: dict = {}
 
 
 def pq_fit(
@@ -67,17 +62,17 @@ def pq_fit(
     Lloyd runs in numpy on the driver: PQ codebooks are model-sized
     and the sample bounds driver memory regardless of corpus size.
     Pass `cache_key` (e.g. the sf_dir) to reuse an already-trained
-    model within the session (train-once-serve-many)."""
+    model within the session (train-once-serve-many): the fit is
+    deterministic for a given corpus, so within one session it is a
+    model artifact, not a recomputation."""
+    if cache_key is not None:
+        return session_memo(
+            emb.sparkSession,
+            ("pq_fit", cache_key, m, k, n_iter, sample_n),
+            lambda: pq_fit(emb, dim, m, k, n_iter, sample_n, id_col, vec_col),
+        )
     import numpy as np
 
-    memo_key = None
-    if cache_key is not None:
-        memo_key = (
-            emb.sparkSession.sparkContext.applicationId,
-            cache_key, m, k, n_iter, sample_n,
-        )
-        if memo_key in _FIT_MEMO:
-            return _FIT_MEMO[memo_key]
     assert dim % m == 0, "dim must divide into m subspaces"
     d_sub = dim // m
     tbl = (
@@ -111,8 +106,6 @@ def pq_fit(
             nz = counts > 0
             C[nz] = sums[nz] / counts[nz][:, None]
         books.append(C.tolist())
-    if memo_key is not None:
-        _FIT_MEMO[memo_key] = books
     return books
 
 
@@ -159,14 +152,6 @@ def pq_encode(
     )
 
 
-
-#: (applicationId, cache_key) → (q_ids, tables); like _FIT_MEMO, the
-#: tables are a deterministic function of the (memoized) model and the
-#: deterministic query set, so re-collecting them per plan
-#: construction is pure overhead.
-_TABLES_MEMO: dict = {}
-
-
 def _query_adc_tables(
     queries, books, dim, query_id_col, query_vec_col, cache_key=None
 ):
@@ -177,17 +162,19 @@ def _query_adc_tables(
 
     `cache_key` must identify the (model, QUERY SET) pair — callers
     here derive both deterministically from sf_dir; pass None for any
-    ad-hoc query set."""
+    ad-hoc query set.  Like the model, the tables are a deterministic
+    function of the (memoized) model and the deterministic query set,
+    so re-collecting them per plan construction is pure overhead."""
+    if cache_key is not None:
+        return session_memo(
+            queries.sparkSession,
+            ("pq_tables", cache_key, dim, len(books), len(books[0])),
+            lambda: _query_adc_tables(
+                queries, books, dim, query_id_col, query_vec_col
+            ),
+        )
     import numpy as np
 
-    memo_key = None
-    if cache_key is not None:
-        memo_key = (
-            queries.sparkSession.sparkContext.applicationId,
-            cache_key, dim, len(books), len(books[0]),
-        )
-        if memo_key in _TABLES_MEMO:
-            return _TABLES_MEMO[memo_key]
     m = len(books)
     d_sub = dim // m
     B = [np.asarray(b) for b in books]
@@ -201,10 +188,7 @@ def _query_adc_tables(
             for s in range(m)
         ]
     )  # m × nq × k
-    out = (q_ids, {qid: per_s[:, qi, :] for qi, qid in enumerate(q_ids)})
-    if memo_key is not None:
-        _TABLES_MEMO[memo_key] = out
-    return out
+    return (q_ids, {qid: per_s[:, qi, :] for qi, qid in enumerate(q_ids)})
 
 
 def _cut_and_rerank(

@@ -30,15 +30,11 @@ per day).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import table
+from ..catalog import durable_store, table
 from .registry import ITERATIVE_CONSTRUCTION, register
 
 
@@ -332,13 +328,12 @@ def join_delta_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
         ).select("o_orderkey", "o_orderdate", "o_totalprice", "c_mktsegment")
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    store = os.path.join(tempfile.gettempdir(), f"ex9_join_view_{tag}")
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
+    def build(path: str) -> None:
         view_rows(orders.filter(F.col("o_orderdate") < _VIEW_SETTLED)).write.mode(
             "overwrite"
-        ).parquet(store)
-    settled = spark.read.parquet(store)
+        ).parquet(path)
+
+    settled = spark.read.parquet(durable_store(sf_dir, "join_view_orders", build))
     delta = view_rows(orders.filter(F.col("o_orderdate") >= _VIEW_DELTA))
     merged = settled.join(
         delta.select("o_orderkey"), "o_orderkey", "left_anti"

@@ -22,6 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import path_tag
 from ..sources.bucketed import bucketed_join, ingest_bucketed
 from .registry import register
 
@@ -32,11 +33,7 @@ def _sf_db(prefix: str, sf_dir: str) -> str:
     """Database name keyed on the FULL sf_dir path, not just its
     basename — two different directories both named 'sf0.01' must not
     share (and silently serve) one ingested layout."""
-    import hashlib
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
-    return f"{prefix}_{tag}_{h}"
+    return f"{prefix}_{path_tag(sf_dir)}"
 
 
 @register(

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import session_memo
 from ..sources.csv import read_hotels_csv
 from ..sources.hotels_fixture import FIXTURE_PATH, duckdb_read_csv
 from .hotels import HOTEL_QUERIES
@@ -135,21 +136,18 @@ def build_hotel_oracles(csv_path) -> dict[str, str]:
     return out
 
 
-#: (applicationId) -> cached hotels DataFrame.  The fixture CSV is an
-#: INPUT table (the flagship six's only source), so its cache is the
-#: same suite amortization as catalog.cache_tables — memoized per
-#: session so .cache() is called once, not once per construction
-#: (every repeat call WARNed "already cached" — round-14).
-_HOTELS_CACHED: dict[str, DataFrame] = {}
-
-
 def _hotels_table(spark: SparkSession) -> DataFrame:
-    key = spark.sparkContext.applicationId
-    df = _HOTELS_CACHED.get(key)
-    if df is None:
-        df = read_hotels_csv(spark, str(FIXTURE_PATH)).cache()
-        _HOTELS_CACHED[key] = df
-    return df
+    """The cached fixture parse.  The fixture CSV is an INPUT table (the
+    flagship six's only source), so its cache is the same suite
+    amortization as catalog.cache_tables — a session memo so .cache()
+    is called once, not once per construction (every repeat call
+    WARNed "already cached" — round-14), and dropped with the cache by
+    release_caches."""
+    return session_memo(
+        spark,
+        ("hotels_csv",),
+        lambda: read_hotels_csv(spark, str(FIXTURE_PATH)).cache(),
+    )
 
 
 def _register_all() -> None:

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import local_df, table
+from ..catalog import local_df, query_persist, table
 from ..operators.dedup import minhash_lsh_pairs, simhash_pairs
 from ..operators.similarity import lsh_cosine_topk
 from .registry import register
@@ -108,65 +108,6 @@ def knn_vectorized_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Memoized per-(session, sf_dir) candidate legs for the recall
-#: monitor: {(applicationId, sf_dir, method): cached top-k DataFrame}.
-#: This is the serving-layer shape the round-3 verdict asked for
-#: (ask #4): a monitoring row PROBES the persisted index state — the
-#: same memoized codebooks/centroids the standalone knn_* queries
-#: serve from — instead of re-deriving every method's candidates per
-#: run.  Each cached leg is ≤ k×|queries| rows (50 here); retention is
-#: intentional suite-level sharing, dropped with the session.
-_ANN_LEGS: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def ann_method_leg(
-    spark: SparkSession, sf_dir: str, method: str
-) -> DataFrame:
-    """Build-or-reuse one ANN method's top-5 candidate set (exact
-    ground truth included as method='exact').  First call per session
-    builds the search plan and caches its (query_id, neighbor_id)
-    result; later calls — the recall monitor's repeats and the
-    standalone sibling queries' recall checks — reuse the tiny cached
-    relation, exactly like serving from a built index."""
-    from ..operators.pq import ivfpq_topk, pq_adc_topk
-    from ..operators.similarity import (
-        brute_force_topk,
-        ivf_cosine_topk,
-        lsh_cosine_topk,
-        sq_cosine_topk,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir, method)
-    leg = _ANN_LEGS.get(key)
-    if leg is not None:
-        return leg
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    builders = {
-        "exact": lambda: brute_force_topk(emb, queries, k=5),
-        "lsh": lambda: lsh_cosine_topk(emb, queries, dim=EMBEDDING_DIM, k=5),
-        "ivf": lambda: ivf_cosine_topk(
-            emb, queries, dim=EMBEDDING_DIM, k=5, num_centroids=8, nprobe=4
-        ),
-        "sq": lambda: sq_cosine_topk(emb, queries, k=5, rerank_factor=3),
-        "pq": lambda: pq_adc_topk(
-            emb, queries, dim=EMBEDDING_DIM, m=16, k=5, rerank_factor=4,
-            cache_key=sf_dir,
-        ),
-        "ivfpq": lambda: ivfpq_topk(
-            emb, queries, dim=EMBEDDING_DIM, m=16, k=5, num_centroids=8,
-            nprobe=4, rerank_factor=4, cache_key=sf_dir,
-        ),
-    }
-    leg = builders[method]().select("query_id", "neighbor_id").cache()
-    _ANN_LEGS[key] = leg
-    return leg
-
-
 @register("ann_recall_report")
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-evidencing ANN quality metric: recall@5 of EVERY
@@ -177,14 +118,45 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate sides are seeded-RNG engine-specific).  At 100 TB
     this is the continuous-monitoring query an ANN index ships with:
     ground truth on a small query sample, one row per method — and it
-    probes the SERVED index state (memoized candidate legs +
-    persisted codebooks, see ann_method_leg) rather than rebuilding
-    five searches per run."""
-    exact = ann_method_leg(spark, sf_dir, "exact")
-    methods = {
-        m: ann_method_leg(spark, sf_dir, m)
-        for m in ("lsh", "ivf", "sq", "pq", "ivfpq")
+    probes the SERVED model state (the session's trained codebooks)
+    rather than retraining five indexes per run."""
+    from ..operators.pq import ivfpq_topk, pq_adc_topk
+    from ..operators.similarity import (
+        brute_force_topk,
+        ivf_cosine_topk,
+        lsh_cosine_topk,
+        sq_cosine_topk,
+    )
+
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    # Each leg is one method's top-5 (query_id, neighbor_id) set, at
+    # most k×|queries| = 50 rows, rebuilt every run as a query cache.
+    searches = {
+        "exact": brute_force_topk(emb, queries, k=5),
+        "lsh": lsh_cosine_topk(emb, queries, dim=EMBEDDING_DIM, k=5),
+        "ivf": ivf_cosine_topk(
+            emb, queries, dim=EMBEDDING_DIM, k=5, num_centroids=8, nprobe=4
+        ),
+        "sq": sq_cosine_topk(emb, queries, k=5, rerank_factor=3),
+        "pq": pq_adc_topk(
+            emb, queries, dim=EMBEDDING_DIM, m=16, k=5, rerank_factor=4,
+            cache_key=sf_dir,
+        ),
+        "ivfpq": ivfpq_topk(
+            emb, queries, dim=EMBEDDING_DIM, m=16, k=5, num_centroids=8,
+            nprobe=4, rerank_factor=4, cache_key=sf_dir,
+        ),
     }
+    methods = {
+        m: query_persist(df.select("query_id", "neighbor_id"))
+        for m, df in searches.items()
+    }
+    exact = methods.pop("exact")
     # Denominator as a broadcast 1-row plan (J1 pattern) — an
     # `exact.count()` here would launch a job during construction.
     denom = exact.agg(F.count(F.lit(1)).alias("n_exact"))

@@ -26,14 +26,10 @@ integer-valued BIGINT sums, event points as small ints clamped in
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import local_df, table
-from ..sources.layout import path_tag
+from ..catalog import durable_store, local_df, table
 from .queries_graph import CC_ORACLE_CTES
 from .registry import ITERATIVE_CONSTRUCTION, register
 
@@ -236,16 +232,15 @@ def incremental_cc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     watermark = 4 * int(max_id) // 5
 
-    # shared tmp-cache tag contract (full-path keyed) — sources/layout.py
-    store = os.path.join(
-        tempfile.gettempdir(), f"ex9_incr_cc_{path_tag(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
+    def build(path: str) -> None:
         settled = pairs.filter(
             (F.col("doc_id_a") < watermark) & (F.col("doc_id_b") < watermark)
         )
-        connected_components(settled).write.mode("overwrite").parquet(store)
-    state = spark.read.parquet(store)  # (node, component)
+        connected_components(settled).write.mode("overwrite").parquet(path)
+
+    state = spark.read.parquet(  # (node, component)
+        durable_store(sf_dir, "incr_cc_documents", build)
+    )
 
     delta = pairs.filter(
         (F.col("doc_id_a") >= watermark) | (F.col("doc_id_b") >= watermark)

@@ -13,18 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import query_persist, table
+from ..catalog import durable_store, query_persist, session_memo, table
 from ..operators.clustering import assign_clusters, kmeans_fit, semdedup_pairs
 from .registry import register
 
-#: Memoized per-(session, sf_dir, k, n_iter) trained centroid tables —
-#: the in-session face of the kmeans_fit_or_load model registry and
-#: the same serving shape as queries_llm_scale._ANN_LEGS (round-3
-#: verdict ask #4: monitoring/serving rows probe persisted model
-#: state instead of retraining per run).  Each entry is a cached
-#: k-row (centroid_id, cvec) relation — model-sized, dropped with the
-#: session.
-_TRAINED_CENTROIDS: dict[tuple[str, str, int, int], DataFrame] = {}
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
 
 
 def trained_centroids(
@@ -33,20 +30,16 @@ def trained_centroids(
     """Fit-or-reuse the corpus k-means model for this session: the
     first caller pays the n_iter Lloyd passes, every later caller
     (semdedup_embeddings, knn_ivf_trained, future monitors) serves
-    from the cached k-row centroid table — train-once-serve-many."""
-    key = (spark.sparkContext.applicationId, sf_dir, k, n_iter)
-    got = _TRAINED_CENTROIDS.get(key)
-    if got is not None:
-        return got
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    from the k-row centroid table — train-once-serve-many (round-3
+    verdict ask #4: monitoring/serving rows probe model state instead
+    of retraining per run).  kmeans_fit returns a driver-local
+    relation (the trained state was collected during the Lloyd loop),
+    so the memo value is already materialized — no cache needed."""
+    return session_memo(
+        spark,
+        ("kmeans", sf_dir, k, n_iter),
+        lambda: kmeans_fit(_embeddings(spark, sf_dir), k=k, n_iter=n_iter),
     )
-    # kmeans_fit returns a driver-local relation (the trained state was
-    # collected during the Lloyd loop), so the memo value is already
-    # materialized — no cache needed.
-    cents = kmeans_fit(emb, k=k, n_iter=n_iter)
-    _TRAINED_CENTROIDS[key] = cents
-    return cents
 
 
 @register("knn_ivf_trained")
@@ -61,9 +54,7 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only: iterative float training is engine-specific."""
     from ..operators.similarity import ivf_cosine_topk
 
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -76,31 +67,29 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("knn_ivf_model_store")
 def knn_ivf_model_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 model-registry path: IVF ANN served from a PERSISTED
-    centroid table (kmeans_fit_or_load) — train once, write the k-row
-    model parquet, every later session loads it instead of retraining.
-    Same probe plan as knn_ivf_trained; the difference is the state
-    contract (`knn_ivf_trained` times train+serve, this row times
-    load+serve after the first fit — both are real deployment points).
-    Rows-only; model-identity and result-equality pinned by
+    centroid table — train once, write the k-row model parquet as a
+    durable store, every later session loads it instead of retraining
+    (and memoizes the load, so serving never re-reads or re-collects
+    the model per plan construction).  Same probe plan as
+    knn_ivf_trained; the difference is the state contract
+    (`knn_ivf_trained` times train+serve, this row times load+serve
+    after the first fit — both are real deployment points).  Rows-only;
+    model-identity and result-equality pinned by
     tests/test_clustering.py."""
-    import os
-    import tempfile
-
-    from ..operators.clustering import kmeans_fit_or_load
     from ..operators.similarity import ivf_cosine_topk
 
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    from ..sources.layout import path_tag
 
-    store = os.path.join(
-        tempfile.gettempdir(), f"ex9_kmeans_model_{path_tag(sf_dir)}_k8_i3"
+    def build(path: str) -> None:
+        kmeans_fit(emb, k=8, n_iter=3).write.mode("overwrite").parquet(path)
+
+    store = durable_store(sf_dir, "kmeans_model_k8_i3", build)
+    centroids = session_memo(
+        spark, ("kmeans_model", store), lambda: spark.read.parquet(store)
     )
-    centroids = kmeans_fit_or_load(emb, store, k=8, n_iter=3)
     return ivf_cosine_topk(
         emb, queries, dim=64, k=5, nprobe=4, centroids=centroids
     ).orderBy("query_id", "rnk")
@@ -122,9 +111,7 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     list purity from training is the first knob before raising
     nprobe.
     """
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     centroids = trained_centroids(spark, sf_dir, k=8, n_iter=3)
     assigned = query_persist(assign_clusters(emb, centroids))
     # Fill the cache NOW (iterative-construction query): the final plan

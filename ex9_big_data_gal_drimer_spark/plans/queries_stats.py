@@ -10,7 +10,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import path_tag, table
 from .registry import register
 
 
@@ -133,11 +133,12 @@ def sketch_store_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only in the driver (sketch estimates are engine-specific).
     """
     orders = table(spark, sf_dir, "orders")
-    # Deterministic per-SF store location: reruns overwrite (idempotent
-    # sink), different scale factors don't collide.
+    # Deterministic per-dataset store location keyed on the full path:
+    # reruns overwrite (idempotent sink — the round trip is what this
+    # query proves, so it is not a durable store), and two datasets
+    # sharing a basename don't collide.
     store = os.path.join(
-        tempfile.gettempdir(),
-        f"ex9_sketch_store_{os.path.basename(sf_dir.rstrip('/'))}",
+        tempfile.gettempdir(), f"ex9_sketch_store_{path_tag(sf_dir)}"
     )
     daily = orders.groupBy(
         F.date_trunc("month", "o_orderdate").alias("month"),

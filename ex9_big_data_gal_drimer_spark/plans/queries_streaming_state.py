@@ -18,10 +18,10 @@ artifacts it leaves behind as plain batch DataFrames:
   IS SQL-expressible — the snapshot must equal a plain groupBy over
   the same events — so it carries a DuckDB oracle.
 
-Both memoize their pipeline run per (session, sf_dir): repeated
-invocations (bench repeats) re-query the existing artifacts, exactly
-like production where the stream runs continuously and consumers
-query its state.
+Both memoize their pipeline run per (session, sf_dir) with
+catalog.session_memo: repeated invocations (bench repeats) re-query
+the existing artifacts, exactly like production where the stream runs
+continuously and consumers query its state.
 """
 
 from __future__ import annotations
@@ -32,10 +32,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import session_memo
 from .registry import register
-
-#: {(applicationId, sf_dir): artifact_dir} for each pipeline.
-_RUNS: dict[tuple[str, str, str], str] = {}
 
 
 def _events_stream_dir(sf_dir: str, workdir: str) -> str:
@@ -60,8 +58,6 @@ def _run_windowed_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     )
 
     key = (spark.sparkContext.applicationId, sf_dir, "ckpt")
-    if key in _RUNS:
-        return _RUNS[key]
     work = tempfile.mkdtemp(prefix="state_inventory_")
     ckpt = os.path.join(work, "checkpoint")
     stream = read_events_stream(spark, _events_stream_dir(sf_dir, work))
@@ -80,7 +76,6 @@ def _run_windowed_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("state-inventory stream did not drain in 300 s")
-    _RUNS[key] = ckpt
     return ckpt
 
 
@@ -97,7 +92,11 @@ def state_operator_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of 1h (window × event_type) groups still in state."""
     from ..streaming.state_reader import read_operator_state, state_metadata
 
-    ckpt = _run_windowed_checkpoint(spark, sf_dir)
+    ckpt = session_memo(
+        spark,
+        ("state_inventory", sf_dir),
+        lambda: _run_windowed_checkpoint(spark, sf_dir),
+    )
     meta = state_metadata(spark, ckpt).select(
         F.col("operatorId").cast("long").alias("operator_id"),
         F.col("operatorName").alias("operator_name"),
@@ -142,9 +141,7 @@ def merge_sink_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sinks import read_merge_state, stream_merge_upsert_sink
     from ..streaming.windows import read_events_stream
 
-    key = (spark.sparkContext.applicationId, sf_dir, "merge")
-    state_dir = _RUNS.get(key)
-    if state_dir is None:
+    def run() -> str:
         work = tempfile.mkdtemp(prefix="merge_sink_")
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "checkpoint")
@@ -154,9 +151,10 @@ def merge_sink_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("merge sink did not drain in 300 s")
-        _RUNS[key] = state_dir
+        return state_dir
+
     return (
-        read_merge_state(spark, state_dir)
+        read_merge_state(spark, session_memo(spark, ("merge_sink", sf_dir), run))
         .select(
             "user_id",
             F.round("total_value", 2).alias("total_value"),

@@ -90,32 +90,27 @@ def read_xml(
 
 
 def ingest_multiformat(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Idempotently materialize the same orders projection as JSONL,
-    ORC, and XML under tmp (path_tag-keyed like the other ingests) and
+    """Materialize the same orders projection as JSONL, ORC, and XML
+    into one durable store (ingest-once like the layout ingests) and
     return {format: path}.  The projection carries the price as exact
     BIGINT cents so every format round-trips the measure bit-exactly
     regardless of its float-text conventions."""
     import os
-    import tempfile
 
-    from .layout import load_table, path_tag
+    from ..catalog import durable_store, load_table
 
-    sf_tag = path_tag(sf_dir)
-    root = os.path.join(tempfile.gettempdir(), f"ex9_formats_{sf_tag}")
-    paths = {f: os.path.join(root, f) for f in ("jsonl", "orc", "xml")}
-    if all(
-        os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths.values()
-    ):
-        return paths
-    df = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F_round_cents("o_totalprice").alias("price_cents"),
-    )
-    write_jsonl(df, paths["jsonl"])
-    write_orc(df, paths["orc"])
-    write_xml(df, paths["xml"])
-    return paths
+    def build(root: str) -> None:
+        df = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_orderstatus",
+            F_round_cents("o_totalprice").alias("price_cents"),
+        )
+        write_jsonl(df, os.path.join(root, "jsonl"))
+        write_orc(df, os.path.join(root, "orc"))
+        write_xml(df, os.path.join(root, "xml"))
+
+    root = durable_store(sf_dir, "formats_orders", build)
+    return {f: os.path.join(root, f) for f in ("jsonl", "orc", "xml")}
 
 
 def F_round_cents(col: str):

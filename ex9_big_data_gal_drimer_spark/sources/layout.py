@@ -15,12 +15,11 @@ date-partitioned 100 TB table dies of when skipped.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import durable_store, load_table
 
 #: Partition column derived at ingest: month granularity keeps
 #: partition counts sane (a 7-year fact table → ~84 dirs; day
@@ -29,45 +28,30 @@ from ..catalog import load_table
 PART_COL = "l_ship_month"
 
 
-def path_tag(sf_dir: str) -> str:
-    """Tmp-cache tag keyed on the FULL sf_dir path (basename +
-    abspath hash), not just its basename — two different directories
-    both named 'sf0.01' must not share (and silently serve) one
-    ingested layout.  Same contract as queries_bucketed._sf_db /
-    queries_incremental's store tag."""
-    import hashlib
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
-    return f"{tag}_{h}"
-
-
 def ingest_partitioned(
     spark: SparkSession, sf_dir: str, table: str = "lineitem"
 ) -> str:
-    """Write `table` date-partitioned under tmp; returns the path.
+    """Write `table` date-partitioned into a durable store; returns
+    the path.
 
-    Idempotent across sessions: plain path-based parquet with
-    mode=overwrite (no catalog entry to collide with), and
-    ingest-once within a lifetime of the layout dir — a completed
-    write (_SUCCESS marker) of the same deterministic source is
-    reused instead of rewritten, the nightly-ingest/every-query-read
-    split the layout exists for.
+    Ingest-once per input version: plain path-based parquet (no
+    catalog entry to collide with), and a completed store of the same
+    input files is reused instead of rewritten — the
+    nightly-ingest/every-query-read split the layout exists for.
     """
-    sf_tag = path_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"ex9_layout_{sf_tag}", table)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    df = load_table(spark, sf_dir, table).withColumn(
-        PART_COL, F.date_format("l_shipdate", "yyyy-MM")
-    )
-    (
-        df.repartition(F.col(PART_COL))
-        .write.mode("overwrite")
-        .partitionBy(PART_COL)
-        .parquet(path)
-    )
-    return path
+
+    def build(path: str) -> None:
+        df = load_table(spark, sf_dir, table).withColumn(
+            PART_COL, F.date_format("l_shipdate", "yyyy-MM")
+        )
+        (
+            df.repartition(F.col(PART_COL))
+            .write.mode("overwrite")
+            .partitionBy(PART_COL)
+            .parquet(path)
+        )
+
+    return durable_store(sf_dir, f"layout_{table}", build)
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -100,23 +84,21 @@ def ingest_sorted(
     skipping is observable at test scale; production uses the 128 MB
     default.
 
-    Idempotent: path-keyed by scale factor, overwrite mode.
+    Ingest-once like ingest_partitioned.
     """
-    sf_tag = path_tag(sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(), f"ex9_sorted_{sf_tag}_{block_size}", table
-    )
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    df = load_table(spark, sf_dir, table)
-    (
-        df.repartitionByRange(n_files, F.col(sort_col))
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .option("parquet.block.size", block_size)
-        .parquet(path)
-    )
-    return path
+
+    def build(path: str) -> None:
+        (
+            load_table(spark, sf_dir, table)
+            .repartitionByRange(n_files, F.col(sort_col))
+            .sortWithinPartitions(sort_col)
+            .write.mode("overwrite")
+            .option("parquet.block.size", block_size)
+            .parquet(path)
+        )
+
+    name = f"sorted_{table}_{sort_col}_{n_files}_{block_size}"
+    return durable_store(sf_dir, name, build)
 
 
 def compact(
@@ -201,48 +183,47 @@ def ingest_zordered(
     predicates on either column or both — the layout for fact tables
     with two independent access paths (time + entity id).
 
-    Idempotent like the other ingests (path keyed, _SUCCESS check).
+    Ingest-once like the other ingests.
     """
-    sf_tag = path_tag(sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(), f"ex9_zorder_{sf_tag}_{bits}_{block_size}", table
-    )
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    df = load_table(spark, sf_dir, table)
-    def as_num(c):
-        # timestamps (ltz or ntz) → epoch seconds; numerics cast direct
-        if df.schema[c].dataType.typeName().startswith("timestamp"):
-            return F.col(c).cast("timestamp").cast("double")
-        return F.col(c).cast("double")
 
-    aggs = []
-    for c in cols:
-        expr = as_num(c)
-        aggs += [F.min(expr).alias(f"{c}__min"), F.max(expr).alias(f"{c}__max")]
-    bounds = df.agg(*aggs).collect()[0]
-    span = (1 << bits) - 1
-    ranks = []
-    for c in cols:
-        expr = as_num(c)
-        lo, hi = bounds[f"{c}__min"], bounds[f"{c}__max"]
-        width = (hi - lo) or 1.0
-        ranks.append(
-            F.least(
-                F.lit(span),
-                F.floor((expr - F.lit(lo)) / F.lit(width) * span).cast("long"),
+    def build(path: str) -> None:
+        df = load_table(spark, sf_dir, table)
+
+        def as_num(c):
+            # timestamps (ltz or ntz) → epoch seconds; numerics cast direct
+            if df.schema[c].dataType.typeName().startswith("timestamp"):
+                return F.col(c).cast("timestamp").cast("double")
+            return F.col(c).cast("double")
+
+        aggs = []
+        for c in cols:
+            expr = as_num(c)
+            aggs += [F.min(expr).alias(f"{c}__min"), F.max(expr).alias(f"{c}__max")]
+        bounds = df.agg(*aggs).collect()[0]
+        span = (1 << bits) - 1
+        ranks = []
+        for c in cols:
+            expr = as_num(c)
+            lo, hi = bounds[f"{c}__min"], bounds[f"{c}__max"]
+            width = (hi - lo) or 1.0
+            ranks.append(
+                F.least(
+                    F.lit(span),
+                    F.floor((expr - F.lit(lo)) / F.lit(width) * span).cast("long"),
+                )
             )
+        (
+            df.withColumn("__z", zorder_key(ranks, bits))
+            .repartitionByRange(n_files, F.col("__z"))
+            .sortWithinPartitions("__z")
+            .drop("__z")
+            .write.mode("overwrite")
+            .option("parquet.block.size", block_size)
+            .parquet(path)
         )
-    (
-        df.withColumn("__z", zorder_key(ranks, bits))
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .option("parquet.block.size", block_size)
-        .parquet(path)
-    )
-    return path
+
+    name = f"zorder_{table}_{'_'.join(cols)}_{n_files}_{bits}_{block_size}"
+    return durable_store(sf_dir, name, build)
 
 
 def ingest_evolving(spark: SparkSession, sf_dir: str, table: str = "orders") -> tuple[str, str]:
@@ -253,23 +234,22 @@ def ingest_evolving(spark: SparkSession, sf_dir: str, table: str = "orders") -> 
     100 TB table faces — new fields appear, history is never
     rewritten).  Readers union the generations with
     ``mergeSchema=true``; v1 rows surface NULL for the late column.
-    Returns the two generation paths.  Idempotent via _SUCCESS
-    markers, same contract as ingest_partitioned."""
-    sf_tag = path_tag(sf_dir)
-    root = os.path.join(tempfile.gettempdir(), f"ex9_evolving_{sf_tag}", table)
-    v1, v2 = os.path.join(root, "v1"), os.path.join(root, "v2")
-    if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in (v1, v2)):
-        return v1, v2
-    base = load_table(spark, sf_dir, table)
-    cut = F.lit("1998-01-01").cast("timestamp_ntz")
-    old_cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
-    channel = F.when(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "online"
-    ).otherwise("store")
-    base.filter(F.col("o_orderdate") < cut).select(*old_cols).coalesce(
-        4
-    ).write.mode("overwrite").parquet(v1)
-    base.filter(F.col("o_orderdate") >= cut).select(
-        *old_cols, channel.alias("o_channel")
-    ).coalesce(4).write.mode("overwrite").parquet(v2)
-    return v1, v2
+    Returns the two generation paths.  Ingest-once, same contract as
+    ingest_partitioned."""
+
+    def build(root: str) -> None:
+        base = load_table(spark, sf_dir, table)
+        cut = F.lit("1998-01-01").cast("timestamp_ntz")
+        old_cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
+        channel = F.when(
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "online"
+        ).otherwise("store")
+        base.filter(F.col("o_orderdate") < cut).select(*old_cols).coalesce(
+            4
+        ).write.mode("overwrite").parquet(os.path.join(root, "v1"))
+        base.filter(F.col("o_orderdate") >= cut).select(
+            *old_cols, channel.alias("o_channel")
+        ).coalesce(4).write.mode("overwrite").parquet(os.path.join(root, "v2"))
+
+    root = durable_store(sf_dir, f"evolving_{table}", build)
+    return os.path.join(root, "v1"), os.path.join(root, "v2")

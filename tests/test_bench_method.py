@@ -172,10 +172,20 @@ def test_close_round_script_parses():
     assert proc.returncode == 0, proc.stderr
 
 
-@pytest.mark.parametrize("args", [[], ["sf_dir"]])
+@pytest.mark.parametrize(
+    "args",
+    [
+        ["shuffle_audit.py"],
+        ["shuffle_audit.py", "sf_dir"],
+        ["dump_plans.py", "hotels_q1"],
+    ],
+)
 def test_shuffle_audit_requires_both_paths(args):
+    """Tools that write files take their output path explicitly: with
+    it missing they exit 2 with a usage line (shuffle_audit.py needs
+    SF_DIR and OUT_JSON, dump_plans.py needs --out)."""
     proc = subprocess.run(
-        [sys.executable, os.path.join("tools", "shuffle_audit.py"), *args],
+        [sys.executable, os.path.join("tools", args[0]), *args[1:]],
         cwd=ROOT,
         capture_output=True,
         text=True,

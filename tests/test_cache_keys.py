@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from ex9_big_data_gal_drimer_spark.sources.layout import path_tag
+from ex9_big_data_gal_drimer_spark.catalog import path_tag
 
 
 def test_path_tag_distinguishes_same_basename_dirs(tmp_path):
@@ -31,17 +31,12 @@ def test_trained_centroids_memoizes_per_session(spark):
     """Second call with identical (session, sf_dir, k, n_iter) must
     return the SAME relation without retraining (the memo is the
     train-once-serve-many contract knn_ivf_trained/semdedup share)."""
-    from ex9_big_data_gal_drimer_spark.plans.queries_semdedup import (
-        _TRAINED_CENTROIDS,
-        trained_centroids,
-    )
+    from ex9_big_data_gal_drimer_spark.plans.queries_semdedup import trained_centroids
 
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     first = trained_centroids(spark, sf_dir, k=8, n_iter=1)
     second = trained_centroids(spark, sf_dir, k=8, n_iter=1)
     assert second is first
-    key = (spark.sparkContext.applicationId, sf_dir, 8, 1)
-    assert _TRAINED_CENTROIDS[key] is first
     # different hyperparameters miss the memo
     other = trained_centroids(spark, sf_dir, k=4, n_iter=1)
     assert other is not first

@@ -127,29 +127,52 @@ def test_trained_ivf_recall_at_least_random(spark):
     assert r_trained >= r_random - 1e-9, f"trained {r_trained} < random {r_random}"
 
 
-def test_model_store_roundtrip_and_equality(spark):
-    """kmeans_fit_or_load: second call loads the persisted model
-    byte-identically, and the stored-model IVF result equals the
-    fresh-trained one."""
-    import os
-    import shutil
-    import tempfile
+def test_model_store_roundtrip_and_equality(spark, tmp_path, monkeypatch):
+    """knn_ivf_model_store: the model store is built once and loaded by
+    a later session memo instead of refitting, the stored centroids
+    equal a fresh kmeans_fit, and the stored-model IVF result equals
+    the fresh-trained one."""
+    from ex9_big_data_gal_drimer_spark import catalog
+    from ex9_big_data_gal_drimer_spark.plans import queries_semdedup
 
-    from ex9_big_data_gal_drimer_spark.operators.clustering import (
-        kmeans_fit_or_load,
-    )
+    monkeypatch.setattr(catalog, "STORE_ROOT", str(tmp_path))
+    fits = []
 
-    emb = _synthetic(spark)
-    store = os.path.join(tempfile.gettempdir(), "ex9_kmeans_model_test")
-    shutil.rmtree(store, ignore_errors=True)
-    first = sorted(map(tuple, kmeans_fit_or_load(emb, store, k=3, n_iter=4).collect()))
-    second = sorted(map(tuple, kmeans_fit_or_load(emb, store, k=3, n_iter=4).collect()))
-    assert first == second and len(first) == 3
-    fresh = sorted(map(tuple, kmeans_fit(emb, k=3, n_iter=4).collect()))
-    assert first == fresh
-    q1 = QUERIES["knn_ivf_model_store"](spark, SF_DIR).collect()
-    q2 = QUERIES["knn_ivf_trained"](spark, SF_DIR).collect()
-    assert sorted(map(tuple, q1)) == sorted(map(tuple, q2))
+    def counting_fit(*args, **kwargs):
+        fits.append(kwargs)
+        return kmeans_fit(*args, **kwargs)
+
+    monkeypatch.setattr(queries_semdedup, "kmeans_fit", counting_fit)
+    first = sorted(map(tuple, QUERIES["knn_ivf_model_store"](spark, SF_DIR).collect()))
+    assert len(fits) == 1
+    catalog.release_caches(spark)  # drops the session memo of the loaded model
+    second = sorted(map(tuple, QUERIES["knn_ivf_model_store"](spark, SF_DIR).collect()))
+    assert len(fits) == 1, "the second session must load the store, not refit"
+    assert first == second and first
+
+    [store] = tmp_path.glob("kmeans_model_k8_i3/*/*")
+    stored = sorted(spark.read.parquet(str(store)).collect())
+    emb = queries_semdedup._embeddings(spark, SF_DIR)
+    fresh = sorted(kmeans_fit(emb, k=8, n_iter=3).collect())
+    assert [r["centroid_id"] for r in stored] == [r["centroid_id"] for r in fresh]
+    assert len(stored) == 8
+    for s, f in zip(stored, fresh):
+        assert s["cvec"] == pytest.approx(f["cvec"], rel=1e-9, abs=1e-12)
+    trained = QUERIES["knn_ivf_trained"](spark, SF_DIR).collect()
+    assert first == sorted(map(tuple, trained))
+
+
+def test_kmeans_fit_releases_its_persist_on_failure(spark):
+    """Mixed-dimension vectors make np.stack raise inside a Lloyd
+    round; the fit's persisted corpus must still be released."""
+    rows = [(i, [1.0, 0.5 * i, 0.0]) for i in range(3)]
+    rows += [(10 + i, [0.0, 1.0]) for i in range(3)]
+    emb = spark.createDataFrame(rows, "vec_id LONG, v ARRAY<DOUBLE>").coalesce(1)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception):
+        kmeans_fit(emb, k=2, n_iter=1)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_semdedup_query_schema_and_accounting(spark):

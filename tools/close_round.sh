@@ -7,10 +7,12 @@
 # in `timeout`): the DuckDB baseline runs every oracle 4x (1 warm +
 # 3 timed) -> ~4x its ~300 s suite value, ~20+ min; the sf1 bench leg
 # is ~25+ min for the same reason.  The DuckDB leg only NEEDS a rerun
-# when oracle SQL changed.  Cold /tmp state (ex9_kmeans_model_*,
-# ex9_incr_cc_*, ex9_sketch_store_*) makes the store-serving queries
-# pay their one-time fit on the first bench pass — if the box was
-# wiped, run bench once to warm the stores and once for the record.
+# when oracle SQL changed.  Cold durable stores (the /tmp/ex9_stores
+# root: layouts, the k-means model, the incremental state tables; see
+# catalog.durable_store) make the store-serving queries pay their
+# one-time build on the first bench pass — if the box was wiped or
+# the testdata rewritten, run bench once to warm the stores and once
+# for the record.
 set -e
 R=${1:?round tag, e.g. r06}
 cd "$(dirname "$0")/.."

@@ -1,7 +1,10 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named queries to plans/<round>/.
+"""Dump .explain("formatted") for named queries into --out.
 
-Usage: python tools/dump_plans.py --tag after --out plans/r14 q1 q2 ...
+Usage: python tools/dump_plans.py --tag after --out DIR q1 q2 ...
+
+``--out`` is required, so a run never overwrites committed plans by
+default.
 
 Run from any checkout's root (the cwd on sys.path decides which code
 is explained); the session is bench.py's ``bench_session``, so the
@@ -26,7 +29,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
     ap.add_argument("--tag", default="after")
-    ap.add_argument("--out", default="plans/r14")
+    ap.add_argument("--out", required=True)
     ap.add_argument(
         "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
